@@ -1,5 +1,6 @@
 package graft.cdc
 
+import graft.sources.ChangefeedSegmentWriter
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -23,10 +24,13 @@ class InvalidCursorException(msg: String) extends RuntimeException(msg)
   *      `startWithRetry` drops it and restarts from scratch — exactly
   *      the reference's ignore_cursor retry.
   *
-  * Scale: classify/envelope are narrow maps; publish parallelism =
-  * partition count; the only global step is a one-value max aggregate.
-  * Cursor commit happens after the batch's publishes, so the pipeline
-  * is at-least-once into the queue (same semantics as the reference).
+  * Scale: a micro-batch is relayed in ONE pass — one Spark job whose
+  * tasks classify, publish and take their partition's max resolved
+  * timestamp; publish parallelism = partition count, and the driver
+  * only takes the max of one value per partition. Cursor commit
+  * happens after the job, so after every publish of its batch: the
+  * pipeline is at-least-once into the queue (same semantics as the
+  * reference).
   */
 class ChangefeedPipeline(
     queue: MessageQueue,
@@ -86,77 +90,59 @@ class ChangefeedPipeline(
     val malformed = col("tbl").isNotNull &&
       (parsed.isNull ||
         !coalesce(array_contains(json_object_keys(parsed), "after"), lit(false)))
+    val bad = if (dlq.isDefined) malformed else lit(false)
+    val logDir = q match { case log: ChangefeedLogQueue => Some(log.dir); case _ => None }
+    // the log queue writes raw rows, so it never reads the envelope
+    val payload = if (logDir.isDefined) lit(null).cast("string") else Changefeed.payloadCol
+    val resolvedUs = when(col("tbl").isNull && col("key").isNull, Changefeed.resolvedUsCol)
     val writer = resumeFrom(frame, ignoreCursor).writeStream
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        // with a DLQ the batch is read twice (route + publish) — keep
-        // the micro-batch from recomputing its source
-        val batch = if (dlq.isDefined) batch0.persist() else batch0
-        try {
-          dlq.foreach { dq =>
-            batch.where(malformed).select(col("value"))
-              .foreachPartition { (it: Iterator[Row]) =>
-                it.foreach { r =>
-                  dq.publish(r.getString(0).getBytes("UTF-8"))
-                  dlqAcc.add(1L)
-                }
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        // ONE job per micro-batch: each task routes its rows (DLQ,
+        // queue, per-table queue or log segment) and returns its
+        // partition's max resolved timestamp
+        val rows = batch.select(col("sort_us"), col("tbl"), col("key"), col("value"),
+          bad.as("bad"), payload.as("payload"), resolvedUs.as("resolved_us"))
+        val maxResolved = rows.queryExecution.toRdd.mapPartitions { it =>
+          // the first four columns are the sink schema, so a row feeds
+          // the segment writer as is; e<batch>p<part> ids keep a
+          // foreachBatch retry idempotent (effectively-once)
+          val segment = logDir.map(d => new ChangefeedSegmentWriter(d,
+            s"e${batchId}p${TaskContext.getPartitionId()}"))
+          // MULTI-TABLE fan-out (the streaming form of cdc_table_router):
+          // the reference binds one process per table and names the
+          // queue after it (cli.yml, queues.rs:17-30) — a
+          // consolidated relay routes each change row to the queue
+          // named after ITS table tag, resolving each handle once per
+          // (partition, table) rather than per record
+          val perTable = scala.collection.mutable.HashMap.empty[String, MessageQueue]
+          var resolved: Option[Long] = None
+          it.foreach { r =>
+            if (r.getBoolean(4)) {
+              dlq.get.publish(r.getUTF8String(3).getBytes)
+              dlqAcc.add(1L)
+            } else if (!r.isNullAt(1)) {
+              segment match {
+                case Some(w) => w.write(r)
+                case None =>
+                  val target = router.fold(q) { make =>
+                    val t = r.getUTF8String(1).toString
+                    perTable.getOrElseUpdate(t, make(t))
+                  }
+                  target.publish(r.getUTF8String(5).getBytes)
               }
+              acc.add(1L)
+            } else if (!r.isNullAt(6))
+              resolved = Some(resolved.fold(r.getLong(6))(math.max(_, r.getLong(6))))
           }
-          val good = if (dlq.isDefined) !malformed else lit(true)
-          q match {
-            case log: ChangefeedLogQueue =>
-              // whole-batch publish through the DSv2 sink: one atomic
-              // segment per partition, e<batch>p<part> ids → idempotent
-              // across foreachBatch retries (effectively-once)
-              val changes = batch.where(col("tbl").isNotNull && good)
-              changes.write.format("graft-changefeed")
-                .option("path", log.dir).option("epochId", batchId)
-                .mode("append").save()
-              acc.add(changes.count())
-            case _ => router match {
-              case Some(make) =>
-                // MULTI-TABLE fan-out (the streaming form of
-                // cdc_table_router #156): the reference binds one
-                // process per table and names the queue after it
-                // (cli.yml, queues.rs:17-30) — a consolidated relay
-                // runs ONE stream over a multi-table feed and routes
-                // each change row to the queue named after ITS table
-                // tag. Queue handles are resolved once per (partition,
-                // table) — |tables| broker channels per task, not per
-                // record — and rows of every table still ride the same
-                // micro-batch, checkpoint, and cursor.
-                val payloads = batch.where(col("tbl").isNotNull && good)
-                  .select(col("tbl"), Changefeed.payloadCol.as("payload"))
-                payloads.foreachPartition { (it: Iterator[Row]) =>
-                  val perTable =
-                    scala.collection.mutable.HashMap.empty[String, MessageQueue]
-                  it.foreach { r =>
-                    val tq = perTable.getOrElseUpdate(r.getString(0),
-                      make(r.getString(0)))
-                    tq.publish(r.getString(1).getBytes("UTF-8"))
-                    acc.add(1L)
-                  }
-                }
-              case None =>
-                val payloads = batch.where(col("tbl").isNotNull && good)
-                  .select(Changefeed.payloadCol.as("payload"))
-                payloads.foreachPartition { (it: Iterator[Row]) =>
-                  it.foreach { r =>
-                    q.publish(r.getString(0).getBytes("UTF-8"))
-                    acc.add(1L)
-                  }
-                }
-            }
-          }
-          val maxResolved = batch
-            .where(col("tbl").isNull && col("key").isNull)
-            .agg(max(Changefeed.resolvedUsCol)).collect()(0)
-          if (!maxResolved.isNullAt(0)) {
-            store.set(maxResolved.getLong(0).toString)
-            curAcc.add(1L)
-          }
-        } finally if (dlq.isDefined) { batch.unpersist(); () }
-        ()
+          segment.foreach(_.commit())
+          Iterator.single(resolved)
+        }.collect().flatten.maxOption
+        // committed only after every publish of the batch finished
+        maxResolved.foreach { c =>
+          store.set(c.toString)
+          curAcc.add(1L)
+        }
       }
     trigger.fold(writer)(writer.trigger).start()
   }

@@ -37,11 +37,12 @@ object InMemoryQueue {
 }
 
 /** Changefeed-log queue: "publishing" appends the batch's change rows
-  * to another changefeed log THROUGH the `graft-changefeed` DSv2 sink
-  * (one atomic segment per partition, idempotent `e<batch>p<part>`
-  * ids) — the broker-free Spark-native queue. Row-level publish is
-  * deliberately unsupported: the pipeline dispatches on this type and
-  * writes whole micro-batches (ChangefeedPipeline.start). */
+  * to another changefeed log THROUGH the `graft-changefeed` sink's
+  * segment writer, called in-task (one atomic segment per partition,
+  * idempotent `e<batch>p<part>` ids) — the broker-free Spark-native
+  * queue. Row-level publish is deliberately unsupported: the pipeline
+  * dispatches on this type and writes whole micro-batch partitions
+  * (ChangefeedPipeline.start). */
 class ChangefeedLogQueue(val dir: String) extends MessageQueue {
   override def publish(data: Array[Byte]): Unit =
     throw new UnsupportedOperationException(

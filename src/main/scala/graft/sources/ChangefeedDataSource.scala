@@ -540,8 +540,8 @@ class ChangefeedWriteBuilder(dir: String, info: LogicalWriteInfo) extends WriteB
     require(got == want,
       s"graft-changefeed sink needs schema (sort_us LONG, tbl STRING, key STRING, " +
         s"value STRING); got ${info.schema().simpleString}")
-    // an explicit epochId option pins batch-write segment ids — the
-    // foreachBatch publish path passes the micro-batch id so per-batch
+    // an explicit epochId option pins batch-write segment ids — a
+    // foreachBatch writer passes the micro-batch id so per-batch
     // writes are idempotent AND distinct across batches (a bare batch
     // write reuses the query id, which repeats across foreachBatch
     // invocations of the same query)

@@ -1,8 +1,16 @@
 package graft.cdc
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
 import graft.SparkSuite
+import graft.sources.ChangefeedLog
+import graft.sources.ChangefeedLog.Record
+import org.apache.spark.GraftListenerShim
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Case class mirroring the events schema for MemoryStream input. */
 case class Ev(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
@@ -191,6 +199,156 @@ class ChangefeedPipelineSpec extends SparkSuite {
     // the reference publishes whatever the feed carried (model.rs:74-91)
     assert(InMemoryQueue.messages(qname).size === 1)
     assert(pipeline.messagesDeadLettered.value === 0L)
+  }
+
+  private val hourUs = 3600000000L
+
+  /** A small two-table log of three segments; each holds change rows of
+    * both tables (one a tombstone), one malformed row and a closing
+    * resolved row. Returns (dir, good change rows, malformed values,
+    * max resolved µs). */
+  private def smallLog(): (String, Seq[Record], Seq[String], Long) = {
+    val dir = Files.createTempDirectory("graft-small-log").toString
+    val segs = (1 to 3).map { s =>
+      val base = s * hourUs
+      val good = Seq(
+        Record(base + 1, Some("events"), Some(s"[$s]"), s"""{"after": {"id": $s}}"""),
+        Record(base + 2, Some("orders"), Some(s"[${100 + s}]"), s"""{"after": {"id": ${100 + s}}}"""),
+        Record(base + 3, Some("events"), Some(s"[$s]"), """{"after": null}"""))
+      val bad = Record(base + 4, Some(if (s % 2 == 0) "orders" else "events"),
+        Some(s"[9$s]"), s"""{"afte$s""")
+      val resolved = Record(base + 5, None, None, s"""{"resolved": "${base + 5}.0000000000"}""")
+      ChangefeedLog.writeSegmentAs(dir, good :+ bad :+ resolved, s"s$s")
+      (good, bad.value)
+    }
+    (dir, segs.flatMap(_._1), segs.map(_._2), 3 * hourUs + 5)
+  }
+
+  /** The log as a stream of one segment per micro-batch. */
+  private def logStream(dir: String): DataFrame =
+    spark.readStream.format("graft-changefeed").option("path", dir)
+      .option("maxSegmentsPerTrigger", 1L).load()
+
+  private def drain(pipeline: ChangefeedPipeline, dir: String,
+      ignoreCursor: Boolean = false): StreamingQuery = {
+    val q = pipeline.start(spark, logStream(dir), ignoreCursor)
+    q.awaitTermination()
+    q
+  }
+
+  private def published(dir: String): Seq[Record] =
+    ChangefeedLog.listSegments(dir).flatMap(s => ChangefeedLog.readSegment(s.path))
+
+  /** Counts job and stage starts per streaming query id. */
+  private class JobCounter extends SparkListener {
+    private val jobs = new ConcurrentLinkedQueue[String]()
+    private val stages = new ConcurrentLinkedQueue[String]()
+    private def queryId(p: java.util.Properties) =
+      Option(p).flatMap(p => Option(p.getProperty("sql.streaming.queryId")))
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      queryId(e.properties).foreach(jobs.add)
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+      queryId(e.properties).foreach(stages.add)
+    def jobsOf(queryId: String): Int = jobs.asScala.count(_ == queryId)
+    def stagesOf(queryId: String): Int = stages.asScala.count(_ == queryId)
+  }
+
+  test("every non-empty relay micro-batch runs exactly one Spark job") {
+    val (log, _, _, _) = smallLog()
+    val run = java.util.UUID.randomUUID.toString.take(8)
+    def pipeline(name: String, queue: MessageQueue, dlq: Option[MessageQueue] = None,
+        router: Option[String => MessageQueue] = None) =
+      name -> new ChangefeedPipeline(queue, new InMemoryCursorStore(s"jobs-$run-$name"),
+        ckpt(), trigger = Some(Trigger.AvailableNow()), deadLetterQueue = dlq,
+        tableRouter = router)
+    val configs = Seq(
+      pipeline("plain", new InMemoryQueue(s"jobs-$run-plain")),
+      pipeline("dlq+log",
+        new ChangefeedLogQueue(Files.createTempDirectory("graft-jobs-out").toString),
+        dlq = Some(new InMemoryQueue(s"jobs-$run-dlq"))),
+      pipeline("router", new InMemoryQueue(s"jobs-$run-unused"),
+        router = Some((t: String) => new InMemoryQueue(s"jobs-$run-$t"))))
+    val counter = new JobCounter
+    spark.sparkContext.addSparkListener(counter)
+    try configs.foreach { case (name, p) =>
+      val q = drain(p, log)
+      GraftListenerShim.drainListenerBus(spark.sparkContext)
+      val batches = q.recentProgress.count(_.numInputRows > 0)
+      assert(batches === 3, name)
+      assert(counter.jobsOf(q.id.toString) === batches,
+        s"$name: ${counter.jobsOf(q.id.toString)} jobs for $batches micro-batches")
+      // one stage per job: no shuffle inside the relay pass
+      assert(counter.stagesOf(q.id.toString) === batches, name)
+    } finally spark.sparkContext.removeSparkListener(counter)
+  }
+
+  test("DLQ + changefeed log queue: poison to the DLQ, good rows to the log, idempotent rerun") {
+    val (log, good, bad, maxResolved) = smallLog()
+    val dname = "t-dlq-log-dead"
+    InMemoryQueue.clear(dname)
+    val out = Files.createTempDirectory("graft-dlq-log-out").toString
+    val checkpoint = ckpt()
+    def pipeline() = new ChangefeedPipeline(new ChangefeedLogQueue(out),
+      new InMemoryCursorStore("t-dlq-log"), checkpoint,
+      trigger = Some(Trigger.AvailableNow()),
+      deadLetterQueue = Some(new InMemoryQueue(dname)))
+    val first = pipeline()
+    drain(first, log)
+    // poison reaches the DLQ raw, and only poison
+    assert(InMemoryQueue.messages(dname).sorted === bad.sorted)
+    // the published log holds exactly the well-formed change rows
+    val key = (r: Record) => (r.sortUs, r.tbl, r.key, r.value)
+    assert(published(out).sortBy(key) === good.sortBy(key))
+    assert(first.messagesSent.value === good.size.toLong)
+    assert(first.messagesDeadLettered.value === bad.size.toLong)
+    assert(new InMemoryCursorStore("t-dlq-log").get() === Some(maxResolved.toString))
+
+    // a batch whose commit never landed re-runs under the same id: its
+    // e<b>p<n> segments are replaced, not duplicated
+    val before = ChangefeedLog.listSegments(out).map(_.path.getFileName.toString)
+    assert(before.forall(_.matches("""seg-\d+-\d+-e[0-2]p\d+\.log""")), before)
+    val commits = Paths.get(checkpoint, "commits")
+    Files.delete(commits.resolve("2"))
+    Files.deleteIfExists(commits.resolve(".2.crc"))
+    val rerun = pipeline()
+    drain(rerun, log, ignoreCursor = true)
+    assert(rerun.messagesSent.value === good.count(_.sortUs > 3 * hourUs).toLong)
+    assert(ChangefeedLog.listSegments(out).map(_.path.getFileName.toString) === before)
+    assert(published(out).sortBy(key) === good.sortBy(key))
+  }
+
+  test("table router + DLQ: poison of every table to the DLQ, rows to their table's queue") {
+    val run = java.util.UUID.randomUUID.toString.take(8)
+    val dname = s"t-route-dead-$run"
+    val store = new InMemoryCursorStore(s"t-route-$run")
+    val pipeline = new ChangefeedPipeline(new InMemoryQueue(s"t-route-$run-unused"),
+      store, ckpt(), deadLetterQueue = Some(new InMemoryQueue(dname)),
+      tableRouter = Some((t: String) => new InMemoryQueue(s"t-route-$run-$t")))
+    val in = MemoryStream[RawFeedRow](93, spark, Some(3))
+    def row(us: Long, tbl: String, value: String) =
+      RawFeedRow(us, Some(tbl), Some(s"[$us]"), value)
+    val good = Seq(row(1, "events", """{"after": {"id": 1}}"""),
+      row(2, "orders", """{"after": {"id": 2}}"""),
+      row(4, "orders", """{"after": null}"""),
+      row(6, "events", """{"after": {"id": 6}}"""))
+    val bad = Seq(row(3, "events", """{"afte"""), row(5, "orders", "42"),
+      row(8, "orders", """{"nope": 1}"""))
+    def resolved(us: Long) = RawFeedRow(us, None, None, s"""{"resolved": "$us.0000000000"}""")
+    in.addData(good ++ bad :+ resolved(9) :+ resolved(7): _*)
+    val q = pipeline.start(spark, in.toDF())
+    q.processAllAvailable(); q.stop()
+    assert(InMemoryQueue.messages(dname).sorted === bad.map(_.value).sorted)
+    for (t <- Seq("events", "orders")) {
+      val msgs = InMemoryQueue.messages(s"t-route-$run-$t")
+      val want = good.filter(_.tbl.contains(t))
+      assert(msgs.size === want.size, t)
+      assert(msgs.forall(_.startsWith(s"""{"table":"$t"""")), msgs)
+      assert(want.forall(r => msgs.exists(_.endsWith(s""""value":${r.value}}"""))), msgs)
+    }
+    assert(InMemoryQueue.messages(s"t-route-$run-unused").isEmpty)
+    assert(pipeline.messagesSent.value === good.size.toLong)
+    assert(pipeline.messagesDeadLettered.value === bad.size.toLong)
+    assert(store.get() === Some("9"))
   }
 }
 
